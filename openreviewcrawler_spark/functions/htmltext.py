@@ -21,9 +21,12 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .urls import canonicalize_series
 
 _TITLE_RE = re.compile(r"<title[^>]*>(.*?)</title>", re.IGNORECASE | re.DOTALL)
 _PARA_RE = re.compile(r"<p[^>]*>(.*?)</p>", re.IGNORECASE | re.DOTALL)
@@ -103,6 +106,26 @@ def with_outlinks(
     return df.withColumn(out_col, _links(F.col(html_col)))
 
 
+def canonical_outlinks(decoded: pd.Series) -> pd.Series:
+    """Per page, ``canonicalize_url`` of each ``<a href>`` in document order.
+
+    One vectorised :func:`~.urls.canonicalize_series` call over the batch's
+    flattened hrefs, cut back into one list per page: every raw href keeps
+    exactly one output (duplicates and order kept), so a page's outlink
+    count is its raw href count.
+    """
+    raw = decoded.map(extract_outlinks)
+    lens = raw.map(len).to_numpy()
+    flat = [h for hrefs in raw for h in hrefs]
+    if not flat:
+        return raw
+    canon = canonicalize_series(pd.Series(flat, dtype=object)).tolist()
+    ends = np.cumsum(lens)
+    return pd.Series(
+        [canon[e - n : e] for e, n in zip(ends, lens)], index=decoded.index, dtype=object
+    )
+
+
 def extract_batch(
     df: DataFrame,
     schema: str,
@@ -112,7 +135,10 @@ def extract_batch(
     """One-pass ``mapInPandas`` variant: text + outlinks from a single decode.
 
     Used by the round pipeline so the fat ``html`` binary column is
-    materialized in Python exactly once per fetched row.
+    materialized in Python exactly once per fetched row. ``outlinks`` are
+    already canonical (:func:`canonical_outlinks`): canonicalisation runs
+    here, inside the parse pass, so the frontier expansion downstream
+    explodes canonical URLs and needs no Python UDF of its own.
     """
 
     passthrough = [f for f in df.columns if f != html_col]
@@ -125,7 +151,7 @@ def extract_batch(
             out = pdf[passthrough].copy()
             out["extracted_text"] = decoded.map(extract_text)
             if want_outlinks:
-                out["outlinks"] = decoded.map(extract_outlinks)
+                out["outlinks"] = canonical_outlinks(decoded)
             yield out
 
     return df.mapInPandas(_run, schema=schema)

@@ -4,10 +4,10 @@ canonicalization (/root/reference/crawler.py:147-158: regex-merge + set dedup).
 Two bit-identical implementations of one contract:
 
 * ``canonicalize_url`` — pure Python, used by the single-node oracle.
-* ``canonicalize_col`` — Spark Column expressions for the structural steps
-  (JVM-side, codegen'd) + one Arrow-vectorized pandas UDF for the
-  percent-decode minority (no per-row Python; see _decode_unreserved_udf
-  for the measured rationale).
+* ``canonicalize_series`` — vectorised pandas string kernels, the engine's
+  implementation: run inside the parse pass for crawl outlinks
+  (``htmltext.extract_batch``) and through one Arrow UDF
+  (``canonicalize_col``) for raw URL columns such as seeds.
 
 Canonical form (RFC 3986-style safe normalizations only):
   1. strip the fragment (``#...``),
@@ -133,6 +133,11 @@ def canonicalize_col(url: Column) -> Column:
     (:func:`canonicalize_series`); downstream operators (host extraction,
     dedup shuffles, hashing) then reference the *materialized* column instead
     of re-inlining a giant expression tree.
+
+    For raw inputs only (seed lists, catalog and stream sources): crawl
+    outlinks are canonicalised inside the parse pass
+    (``htmltext.extract_batch``), so a crawl round runs no second Python
+    pass for them.
 
     Built lazily: the pandas_udf decorator needs an active SparkSession, and
     this module is also imported by the Spark-free single-node oracle.

@@ -1,12 +1,21 @@
 """The crawl plan — batch scheduling rounds over the frontier.
 
-One round (the Spark lifecycle replacing /root/reference/crawler.py:15-111):
+One round (the Spark lifecycle replacing the reference crawler's fetch loop):
 
   frontier scan -> [Bloom probe +] exact anti-join vs seen -> robots filter
   (broadcast host->rule map) -> per-host priority top-k admit (politeness)
-  -> deterministic fetch_seq -> fetch = join pages on url -> parse (Arrow
-  batch: text + outlinks) -> frontier expansion (min-merge priorities)
-  -> snapshot commit (seen/fetched/metrics append, frontier replace).
+  -> deterministic fetch_seq -> fetch = join pages on url -> parse (one
+  Arrow batch pass: text + canonical outlinks) -> frontier expansion
+  (explode, min-merge priorities) -> per-bucket metrics (one aggregation
+  over the persisted stage outputs) -> snapshot commit (seen/fetched/metrics
+  append, frontier replace).
+
+In the default configuration the parse is the round's only Python pass:
+outlinks leave it canonical, so the expansion is pure JVM work, and
+``canonicalize_col`` runs only on raw inputs such as the seeds. Round 1's
+seen table is a statically empty relation, so its anti-joins fold away at
+planning time; later rounds read frontier and seen back with declared
+schemas, so no read launches a schema inference job.
 
 Rounds are driver-side Python iterations; within a round everything is one
 declarative DataFrame plan optimized by Catalyst. Batch rounds (not
@@ -18,6 +27,7 @@ from __future__ import annotations
 
 import tempfile
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -103,7 +113,10 @@ def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    return spark.createDataFrame([], schema)
+    """An empty table the optimizer can see is empty: ``limit(0)`` becomes an
+    empty ``LocalRelation``, so anti-joins against it fold away at planning
+    time instead of shuffling the other side against nothing."""
+    return spark.createDataFrame([], schema).limit(0)
 
 
 def run_round(
@@ -239,12 +252,12 @@ def run_round(
         "warc_ts",
     )
 
-    # frontier expansion: outlinks -> canonical candidates at depth+1,
-    # min-merged by priority (seed_index, depth); drop anything already seen.
+    # frontier expansion: the parse pass already canonicalised the outlinks,
+    # so this is pure JVM work — explode -> candidates at depth+1, min-merged
+    # by priority (seed_index, depth); drop anything already seen.
     links = (
         parsed.filter(F.col("depth") < F.lit(cfg.max_depth))
-        .select("seed_index", (F.col("depth") + 1).alias("depth"), F.explode("outlinks").alias("raw"))
-        .select("seed_index", "depth", canonicalize_col(F.col("raw")).alias("url"))
+        .select("seed_index", (F.col("depth") + 1).alias("depth"), F.explode("outlinks").alias("url"))
         .withColumn("host", host_col(F.col("url")))
         .filter(F.col("host") != "")
     )
@@ -285,29 +298,25 @@ def run_round(
         denied.select("url", "url_hash", F.lit(round_no).cast("int").alias("round"))
     )
 
-    bucket = F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket")
-    m_sched = stamped.groupBy(bucket).agg(F.count("*").alias("n_scheduled"))
-    m_fetch = parsed.groupBy(
-        F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket")
-    ).agg(F.count("*").alias("n_fetched"))
-    m_cand = cand.groupBy(
-        F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket")
-    ).agg(F.count("*").alias("n_candidates"))
-    m_denied = denied.groupBy(
-        F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket")
-    ).agg(F.count("*").alias("n_denied"))
+    # per-bucket metrics: ONE aggregation over a kind-tagged union of the
+    # already-persisted stage outputs (each branch is a cache scan of
+    # ``host``), not one groupBy per stage joined back together
+    kinds = ("n_candidates", "n_denied", "n_scheduled", "n_fetched")
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            df.select("host", F.lit(k).alias("kind"))
+            for k, df in enumerate((cand, denied, stamped, parsed))
+        ],
+    )
     metrics = (
-        m_cand.join(m_denied, "host_bucket", "full")
-        .join(m_sched, "host_bucket", "full")
-        .join(m_fetch, "host_bucket", "full")
+        tagged.groupBy(F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket"))
+        .agg(*[F.count_if(F.col("kind") == k).alias(name) for k, name in enumerate(kinds)])
         .select(
             F.lit(round_no).cast("int").alias("round"),
             "host_bucket",
-            F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
-            F.coalesce("n_denied", F.lit(0)).alias("n_denied"),
-            F.coalesce("n_scheduled", F.lit(0)).alias("n_scheduled"),
-            F.coalesce("n_fetched", F.lit(0)).alias("n_fetched"),
-            F.coalesce("n_fetched", F.lit(0)).alias("n_parsed"),
+            *kinds,
+            F.col("n_fetched").alias("n_parsed"),
         )
     )
 
@@ -335,6 +344,10 @@ def run_crawl(
     """Multi-round crawl with snapshot checkpoints; resumable mid-crawl."""
     if store is None:
         store = SnapshotStore(tempfile.mkdtemp(prefix="crawl_store_"))
+    # declared on the store, not passed per call, so a SnapshotStore subclass
+    # that overrides read(spark, table, round_no) still reads without a
+    # schema-inference job
+    store.schemas.update(frontier=FRONTIER_SCHEMA, seen=SEEN_SCHEMA)
     state = CrawlState(store=store)
 
     start_round = 1

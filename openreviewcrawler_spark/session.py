@@ -8,8 +8,42 @@ UTC timestamps for oracle comparison).
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+
+def host_cores() -> int:
+    """Cores this process may run on: its CPU affinity mask, which a
+    container's cpuset narrows below ``os.cpu_count()``."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API off Linux
+        return os.cpu_count() or 1
+
+
+def host_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap for this host: a quarter of ``MemTotal``, at least 1 GiB.
+    The rest stays for the Python workers and the tmpfs shuffle directory,
+    which also live in RAM. Spark's own 1g where ``meminfo`` is unreadable."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{max(1024, int(line.split()[1]) // 4096)}m"
+    except OSError:
+        pass
+    return "1g"
+
+
+def session_sizing(env: Mapping[str, str] = os.environ) -> tuple[str, str, str]:
+    """(local cores, shuffle partitions, driver memory): the
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_SHUFFLE`` / ``SPARK_GRAFT_DRIVER_MEM``
+    overrides when set, else derived from the host."""
+    cpus = env.get("SPARK_GRAFT_CPUS") or str(host_cores())
+    shuffle = env.get("SPARK_GRAFT_SHUFFLE") or cpus
+    driver_mem = env.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_memory()
+    return cpus, shuffle, driver_mem
 
 
 def get_spark(
@@ -20,15 +54,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Parameters are env-overridable so the driver/bench can pin parallelism:
-    ``SPARK_GRAFT_CPUS`` sets local core count, ``SPARK_GRAFT_SHUFFLE`` the
-    shuffle partition count.
+    Sizing defaults come from :func:`session_sizing`: the host's cores and
+    memory, unless ``SPARK_GRAFT_CPUS`` (local core count),
+    ``SPARK_GRAFT_SHUFFLE`` (shuffle partition count) or
+    ``SPARK_GRAFT_DRIVER_MEM`` pin them.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, shuffle, driver_mem = session_sizing()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+        shuffle_partitions = int(shuffle)
 
     # Shuffle/spill dir: this sandbox's disk-backed /tmp serializes all
     # shuffle I/O (measured: local[32] was no faster than local[8] until the
@@ -54,7 +89,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -40,6 +40,9 @@ class SnapshotStore:
         self.root = root
         os.makedirs(root, exist_ok=True)
         self._pending: dict[str, list[str] | str] = {}
+        #: table -> DDL schema that :meth:`read` declares when its caller
+        #: passes none; held in memory only, never written to a manifest
+        self.schemas: dict[str, str] = {}
 
     # -- write side -------------------------------------------------------
     def stage_append(self, df: DataFrame, table: str, round_no: int) -> str:
@@ -93,12 +96,27 @@ class SnapshotStore:
         return None if m is None else int(m["round"])
 
     def read(
-        self, spark: SparkSession, table: str, round_no: int | None = None
+        self,
+        spark: SparkSession,
+        table: str,
+        round_no: int | None = None,
+        schema: str | None = None,
     ) -> DataFrame | None:
+        """The committed segments of ``table`` as of snapshot ``round_no``
+        (default: the latest), or None if the table has none.
+
+        ``schema`` is the table's DDL (e.g. ``"url string, round int"``);
+        when None, ``self.schemas[table]`` is used if declared. A declared
+        schema lets the scan skip Parquet schema inference, which otherwise
+        launches one Spark job per read to open a footer. Columns resolve by
+        name and every column reads back nullable, as with inference.
+        """
         paths = self._committed_paths(table, round_no)
         if not paths:
             return None
-        return spark.read.parquet(*[os.path.join(self.root, p) for p in paths])
+        schema = schema or self.schemas.get(table)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*[os.path.join(self.root, p) for p in paths])
 
     def extra(self) -> dict:
         m = self.manifest()

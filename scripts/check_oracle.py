@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from collections import Counter
 
 import duckdb
 
@@ -90,10 +91,21 @@ def type_mismatches(spark_dtypes, duck_desc):
     column whose normalized types differ. This is the local stand-in for
     the driver's TYPED value hash (r1 float repr, r3 arrays, r4 integer
     width were all classes the value-only compare could not see).
+
+    A column name that occurs more than once on either side (case-
+    insensitively) is reported as 'col: duplicate in <engine> output': the
+    by-name compare below would keep only one of the duplicates and could
+    hide a type mismatch on the other.
     """
+    out = []
+    for engine, names in (
+        ("spark", [n for n, _ in spark_dtypes]),
+        ("duckdb", [r[0] for r in duck_desc]),
+    ):
+        counts = Counter(n.lower() for n in names)
+        out += [f"{c}: duplicate in {engine} output" for c in sorted(counts) if counts[c] > 1]
     s = {n.lower(): norm_spark_type(t) for n, t in spark_dtypes}
     d = {r[0].lower(): norm_duck_type(r[1]) for r in duck_desc}
-    out = []
     for col in sorted(set(s) & set(d)):
         if s[col] != d[col]:
             out.append(f"{col}: spark={s[col]} duckdb={d[col]}")

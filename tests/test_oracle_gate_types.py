@@ -77,6 +77,16 @@ def test_plain_aggregate_sum_also_flagged(con):
     assert mis == ["s: spark=i64 duckdb=i128"]
 
 
+def test_duplicate_column_names_cannot_hide_a_mismatch(con):
+    """Keyed by lowercased name, the second 'x' used to shadow the first, so
+    the int-vs-BIGINT mismatch on the first column went unreported."""
+    sql = "select doc_id as x, doc_id as \"X\" from documents"
+    duck_desc = con.execute("describe " + sql).fetchall()
+    mis = type_mismatches([("x", "int"), ("X", "bigint")], duck_desc)
+    assert mis == ["x: duplicate in spark output", "x: duplicate in duckdb output"]
+    assert type_mismatches([("x", "bigint")], duck_desc[:1]) == []
+
+
 SCALAR_OK = {"i64", "i32", "i16", "i8", "f64", "f32", "str", "bool", "date", "ts", "bytes"}
 
 

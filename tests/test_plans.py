@@ -322,3 +322,134 @@ def test_round_counts_ride_observations(spark):
         0,
     )
     assert r0 == {"n_candidates": 0}
+
+
+def own_nodes(df) -> list[str]:
+    """One-line descriptions of the physical operators of ``df`` itself,
+    stopping at its cache scans (a persisted relation's plan hangs off
+    InMemoryTableScan as an inner child, which ``children()`` does not
+    walk), so the stage outputs a round persists are not counted again."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node.simpleString(25))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+@pytest.fixture()
+def one_round(spark, tmp_path):
+    """One run_round as run_crawl runs it: the frontier read back from a
+    snapshot store; seen either a real table or the crawl's empty one."""
+    from openreviewcrawler_spark.plans.crawl import (
+        FRONTIER_SCHEMA,
+        SEEN_SCHEMA,
+        CrawlConfig,
+        _empty,
+        run_round,
+        seeds_to_frontier,
+    )
+    from openreviewcrawler_spark.sources.bench_data import (
+        synth_pages,
+        synth_robots,
+        synth_seeds,
+        synth_seen,
+    )
+    from openreviewcrawler_spark.sources.checkpoint import SnapshotStore
+
+    n_pages, n_hosts = 600, 8
+    store = SnapshotStore(str(tmp_path))
+    store.stage_replace(seeds_to_frontier(synth_seeds(spark, n_pages, n_hosts)), "frontier", 0)
+    store.commit(0)
+    rounds = []
+
+    def run(empty_seen: bool) -> dict:
+        seen = _empty(spark, SEEN_SCHEMA) if empty_seen else synth_seen(spark, n_pages, n_hosts)
+        r = run_round(
+            spark,
+            synth_pages(spark, n_pages, n_hosts),
+            store.read(spark, "frontier", schema=FRONTIER_SCHEMA),
+            seen,
+            synth_robots(spark, n_hosts, 8),
+            CrawlConfig(max_rounds=1, default_budget=8),
+            2,
+            0,
+        )
+        rounds.append(r)
+        return r
+
+    yield run
+    for r in rounds:
+        for df in r["_cached"]:
+            df.unpersist()
+
+
+def test_frontier_write_runs_no_python_udf(one_round):
+    """Outlinks leave the parse pass canonical: the round-N frontier write
+    (frontier read from the store, real seen table) evaluates no Python UDF
+    anywhere in its plan — the parse's MapInPandas sits in the persisted
+    ``parsed`` relation, the expansion is JVM-only."""
+    r = one_round(empty_seen=False)
+    plan = plan_of(r["frontier_next"])
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+    assert "Generate explode(outlinks" in "\n".join(own_nodes(r["frontier_next"]))
+
+
+def test_metrics_is_one_aggregation(one_round):
+    """Per-bucket metrics: one aggregate exchange over the union of the
+    persisted stage outputs, and no join (was 4 groupBys + 3 full joins)."""
+    nodes = own_nodes(one_round(empty_seen=False)["metrics"])
+    assert sum(n.startswith("Exchange hashpartitioning") for n in nodes) == 1
+    assert sum(n.startswith("HashAggregate") for n in nodes) == 2  # partial + final
+    assert not [n for n in nodes if "Join" in n]
+    assert sum(n.startswith("InMemoryTableScan") for n in nodes) == 4
+
+
+def test_empty_seen_folds_the_anti_joins_away(one_round):
+    """Round 1's seen table is statically empty, so neither the candidate
+    anti-join nor the outlink anti-join against seen reaches the physical
+    plan; only the two anti-joins against the round's processed URLs stay.
+    A real seen table keeps all three (the run_round contract)."""
+    def anti_joins(r):
+        return sum("LeftAnti" in n for n in own_nodes(r["frontier_next"]))
+
+    first = one_round(empty_seen=True)
+    assert "Join" not in plan_of(first["_cached"][0])  # cand = the frontier scan
+    assert anti_joins(first) == 2
+    later = one_round(empty_seen=False)
+    assert "LeftAnti" in plan_of(later["_cached"][0])
+    assert anti_joins(later) == 3
+
+
+def test_store_read_with_declared_schema_runs_no_job(spark, tmp_path):
+    """Reading a table back with a declared schema (per call, or declared on
+    the store as run_crawl does for frontier and seen) plans without the
+    Parquet schema-inference job that an undeclared read launches."""
+    from openreviewcrawler_spark.plans.crawl import SEEN_SCHEMA
+    from openreviewcrawler_spark.sources.checkpoint import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path))
+    rows = [("http://a.example/", 7, 1), ("http://b.example/x", -3, 1)]
+    store.stage_append(spark.createDataFrame(rows, SEEN_SCHEMA), "seen", 1)
+    store.commit(1)
+    sc = spark.sparkContext
+
+    def read_jobs(group: str, **kw) -> tuple[int, list]:
+        sc.setJobGroup(group, group)
+        try:
+            df = store.read(spark, "seen", **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert df.schema.simpleString() == spark.createDataFrame([], SEEN_SCHEMA).schema.simpleString()
+        return n, sorted(tuple(r) for r in df.collect())
+
+    assert read_jobs("seen-inferred")[0] >= 1
+    assert read_jobs("seen-declared-per-call", schema=SEEN_SCHEMA) == (0, sorted(rows))
+    store.schemas["seen"] = SEEN_SCHEMA
+    assert read_jobs("seen-declared-on-store") == (0, sorted(rows))
