@@ -14,8 +14,8 @@ In the default configuration the parse is the round's only Python pass:
 outlinks leave it canonical, so the expansion is pure JVM work, and
 ``canonicalize_col`` runs only on raw inputs such as the seeds. Round 1's
 seen table is a statically empty relation, so its anti-joins fold away at
-planning time; later rounds read frontier and seen back with declared
-schemas, so no read launches a schema inference job.
+planning time; later rounds read frontier and seen back with the schemas
+the store wrote them with, so no read launches a schema inference job.
 
 Rounds are driver-side Python iterations; within a round everything is one
 declarative DataFrame plan optimized by Catalyst. Batch rounds (not
@@ -298,9 +298,9 @@ def run_round(
         denied.select("url", "url_hash", F.lit(round_no).cast("int").alias("round"))
     )
 
-    # per-bucket metrics: ONE aggregation over a kind-tagged union of the
-    # already-persisted stage outputs (each branch is a cache scan of
-    # ``host``), not one groupBy per stage joined back together
+    # per-bucket metrics: one aggregation over a kind-tagged union of the
+    # persisted stage outputs; every branch is a cache scan of ``host``, so
+    # the union recomputes nothing
     kinds = ("n_candidates", "n_denied", "n_scheduled", "n_fetched")
     tagged = reduce(
         DataFrame.unionByName,
@@ -344,10 +344,6 @@ def run_crawl(
     """Multi-round crawl with snapshot checkpoints; resumable mid-crawl."""
     if store is None:
         store = SnapshotStore(tempfile.mkdtemp(prefix="crawl_store_"))
-    # declared on the store, not passed per call, so a SnapshotStore subclass
-    # that overrides read(spark, table, round_no) still reads without a
-    # schema-inference job
-    store.schemas.update(frontier=FRONTIER_SCHEMA, seen=SEEN_SCHEMA)
     state = CrawlState(store=store)
 
     start_round = 1

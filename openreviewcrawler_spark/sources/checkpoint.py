@@ -28,6 +28,7 @@ import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 APPEND_TABLES = ("seen", "fetched", "metrics")
 REPLACE_TABLES = ("frontier",)
@@ -40,14 +41,15 @@ class SnapshotStore:
         self.root = root
         os.makedirs(root, exist_ok=True)
         self._pending: dict[str, list[str] | str] = {}
-        #: table -> DDL schema that :meth:`read` declares when its caller
-        #: passes none; held in memory only, never written to a manifest
-        self.schemas: dict[str, str] = {}
+        # table -> schema of the last segment this instance wrote; in memory
+        # only, so a store reopened in a new process infers it once per table
+        self._schemas: dict[str, StructType] = {}
 
     # -- write side -------------------------------------------------------
     def stage_append(self, df: DataFrame, table: str, round_no: int) -> str:
         rel = os.path.join(table, f"r{round_no:05d}")
         df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+        self._schemas[table] = df.schema
         prev = self._committed_paths(table)
         self._pending[table] = [*prev, rel]
         return rel
@@ -55,6 +57,7 @@ class SnapshotStore:
     def stage_replace(self, df: DataFrame, table: str, round_no: int) -> str:
         rel = os.path.join(table, f"r{round_no:05d}")
         df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+        self._schemas[table] = df.schema
         self._pending[table] = [rel]
         return rel
 
@@ -96,25 +99,20 @@ class SnapshotStore:
         return None if m is None else int(m["round"])
 
     def read(
-        self,
-        spark: SparkSession,
-        table: str,
-        round_no: int | None = None,
-        schema: str | None = None,
+        self, spark: SparkSession, table: str, round_no: int | None = None
     ) -> DataFrame | None:
         """The committed segments of ``table`` as of snapshot ``round_no``
         (default: the latest), or None if the table has none.
 
-        ``schema`` is the table's DDL (e.g. ``"url string, round int"``);
-        when None, ``self.schemas[table]`` is used if declared. A declared
-        schema lets the scan skip Parquet schema inference, which otherwise
+        A table this instance wrote is read with the schema it was written
+        with, so the scan skips Parquet schema inference, which otherwise
         launches one Spark job per read to open a footer. Columns resolve by
         name and every column reads back nullable, as with inference.
         """
         paths = self._committed_paths(table, round_no)
         if not paths:
             return None
-        schema = schema or self.schemas.get(table)
+        schema = self._schemas.get(table)
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(*[os.path.join(self.root, p) for p in paths])
 

@@ -78,8 +78,9 @@ def test_plain_aggregate_sum_also_flagged(con):
 
 
 def test_duplicate_column_names_cannot_hide_a_mismatch(con):
-    """Keyed by lowercased name, the second 'x' used to shadow the first, so
-    the int-vs-BIGINT mismatch on the first column went unreported."""
+    """Columns are matched by lowercased name, so a duplicated name could
+    shadow the int-vs-BIGINT mismatch on its first column: duplicates are
+    reported as mismatches on the side that has them."""
     sql = "select doc_id as x, doc_id as \"X\" from documents"
     duck_desc = con.execute("describe " + sql).fetchall()
     mis = type_mismatches([("x", "int"), ("X", "bigint")], duck_desc)

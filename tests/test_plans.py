@@ -346,7 +346,6 @@ def one_round(spark, tmp_path):
     """One run_round as run_crawl runs it: the frontier read back from a
     snapshot store; seen either a real table or the crawl's empty one."""
     from openreviewcrawler_spark.plans.crawl import (
-        FRONTIER_SCHEMA,
         SEEN_SCHEMA,
         CrawlConfig,
         _empty,
@@ -372,7 +371,7 @@ def one_round(spark, tmp_path):
         r = run_round(
             spark,
             synth_pages(spark, n_pages, n_hosts),
-            store.read(spark, "frontier", schema=FRONTIER_SCHEMA),
+            store.read(spark, "frontier"),
             seen,
             synth_robots(spark, n_hosts, 8),
             CrawlConfig(max_rounds=1, default_budget=8),
@@ -402,7 +401,7 @@ def test_frontier_write_runs_no_python_udf(one_round):
 
 def test_metrics_is_one_aggregation(one_round):
     """Per-bucket metrics: one aggregate exchange over the union of the
-    persisted stage outputs, and no join (was 4 groupBys + 3 full joins)."""
+    persisted stage outputs, and no join."""
     nodes = own_nodes(one_round(empty_seen=False)["metrics"])
     assert sum(n.startswith("Exchange hashpartitioning") for n in nodes) == 1
     assert sum(n.startswith("HashAggregate") for n in nodes) == 2  # partial + final
@@ -426,10 +425,10 @@ def test_empty_seen_folds_the_anti_joins_away(one_round):
     assert anti_joins(later) == 3
 
 
-def test_store_read_with_declared_schema_runs_no_job(spark, tmp_path):
-    """Reading a table back with a declared schema (per call, or declared on
-    the store as run_crawl does for frontier and seen) plans without the
-    Parquet schema-inference job that an undeclared read launches."""
+def test_store_reads_back_with_the_written_schema(spark, tmp_path):
+    """A store reads a table it wrote with the schema it wrote it with, so
+    the read plans without the Parquet schema-inference job; a store
+    reopened over the same root infers the same schema with that job."""
     from openreviewcrawler_spark.plans.crawl import SEEN_SCHEMA
     from openreviewcrawler_spark.sources.checkpoint import SnapshotStore
 
@@ -439,17 +438,16 @@ def test_store_read_with_declared_schema_runs_no_job(spark, tmp_path):
     store.commit(1)
     sc = spark.sparkContext
 
-    def read_jobs(group: str, **kw) -> tuple[int, list]:
+    def read_jobs(group: str, s: SnapshotStore) -> tuple[int, list]:
         sc.setJobGroup(group, group)
         try:
-            df = store.read(spark, "seen", **kw)
+            df = s.read(spark, "seen")
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         n = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert df.schema.simpleString() == spark.createDataFrame([], SEEN_SCHEMA).schema.simpleString()
+        assert df.schema == spark.read.parquet(str(tmp_path / "seen" / "r00001")).schema
         return n, sorted(tuple(r) for r in df.collect())
 
-    assert read_jobs("seen-inferred")[0] >= 1
-    assert read_jobs("seen-declared-per-call", schema=SEEN_SCHEMA) == (0, sorted(rows))
-    store.schemas["seen"] = SEEN_SCHEMA
-    assert read_jobs("seen-declared-on-store") == (0, sorted(rows))
+    assert read_jobs("seen-written", store) == (0, sorted(rows))
+    reopened = read_jobs("seen-reopened", SnapshotStore(str(tmp_path)))
+    assert reopened[0] >= 1 and reopened[1] == sorted(rows)
